@@ -17,6 +17,7 @@ are shared.  The AES block cipher itself lives in functions/aes.py
 from __future__ import annotations
 
 import hashlib
+import threading
 
 from accountant_pdf_extract_spark import spec
 
@@ -64,26 +65,29 @@ try:  # pragma: no cover - exercised implicitly by every rc4() call
         ]
         _lc.RC4.restype = None
 
-        # reusable key-state and output buffers: RC4_set_key fully
-        # re-inits rc4_key_st on every call and RC4 overwrites the
-        # first len(data) output bytes, and a Spark python worker runs
-        # one task at a time, so sharing is safe — allocating+zeroing
-        # fresh ctypes buffers per call was ~4% of kernel time on an
-        # encrypted-doc corpus.  The output buffer grows geometrically;
-        # string_at copies exactly the written length back out.
-        _rc4_st = ctypes.create_string_buffer(2048)  # >= rc4_key_st
-        _rc4_out = [ctypes.create_string_buffer(1 << 16)]
+        class _Rc4Buffers(threading.local):
+            """Reusable key-state and output buffers, one pair per
+            thread: RC4_set_key fully re-inits rc4_key_st on every
+            call and RC4 overwrites the first len(data) output bytes,
+            while allocating+zeroing fresh ctypes buffers per call was
+            ~4% of kernel time on an encrypted-doc corpus.  The output
+            buffer grows geometrically; string_at copies exactly the
+            written length back out."""
+
+            def __init__(self) -> None:
+                self.st = ctypes.create_string_buffer(2048)  # >= rc4_key_st
+                self.out = ctypes.create_string_buffer(1 << 16)
+
+        _rc4_buf = _Rc4Buffers()
 
         def _rc4_ossl(key: bytes, data: bytes) -> bytes:
+            buf = _rc4_buf
             n = len(data)
-            out = _rc4_out[0]
-            if n > len(out):
-                out = _rc4_out[0] = ctypes.create_string_buffer(
-                    max(n, 2 * len(out))
-                )
-            _lc.RC4_set_key(_rc4_st, len(key), key)
-            _lc.RC4(_rc4_st, n, data, out)
-            return ctypes.string_at(out, n)
+            if n > len(buf.out):
+                buf.out = ctypes.create_string_buffer(max(n, 2 * len(buf.out)))
+            _lc.RC4_set_key(buf.st, len(key), key)
+            _lc.RC4(buf.st, n, data, buf.out)
+            return ctypes.string_at(buf.out, n)
 
         _probe_k, _probe_d = b"\x01\x02\x03\x04\x05", bytes(range(64))
         if _rc4_ossl(_probe_k, _probe_d) == _rc4_py(_probe_k, _probe_d):
@@ -94,7 +98,13 @@ except Exception:
 
 def rc4(key: bytes, data: bytes) -> bytes:
     """Plain RC4 (the PDF 'V2' cipher) — symmetric, so this is both
-    encrypt and decrypt."""
+    encrypt and decrypt.
+
+    Thread-safe: the libcrypto path keeps its buffers per thread (the
+    foreign calls release the GIL), and each call is done with them
+    before it returns, so callers that interleave in one thread — the
+    generator encrypting and the kernel decrypting in one Spark
+    Python worker — never see each other's state."""
     if _rc4_native is not None:
         return _rc4_native(key, data)
     return _rc4_py(key, data)

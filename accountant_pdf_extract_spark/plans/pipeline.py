@@ -10,6 +10,9 @@ pruning → one exchange → embarrassingly parallel extraction.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,6 +70,18 @@ def _with_drop_metric(spark, kernel_fn, acc=None):
     return run, dropped
 
 
+class PresaltedSource(NamedTuple):
+    """Attached as ``presalted_source`` to the frame that
+    ``sources.synth.interleaved_from_documents(..., salt_buckets=S)``
+    returns: the narrow rows already salted and exchange-partitioned
+    on the future doc_id, the Arrow generator that turns them into
+    that frame's rows, and S."""
+
+    pre: DataFrame
+    generate: Callable
+    salt_buckets: int
+
+
 def _run_kernel(df, kernel_fn, out_schema, salt_buckets, num_partitions,
                 drop_acc, presalted=False):
     """The shared assert → salt → repartition → Arrow-kernel pipeline
@@ -80,17 +95,36 @@ def _run_kernel(df, kernel_fn, out_schema, salt_buckets, num_partitions,
     applied upstream of a generator on the narrow pre-payload rows
     (guide §8: shuffle the lightweight proxy, not the heavy bytes).
     The repartition is then skipped outright; the job keeps exactly one
-    salted shuffle, it just sits before the payload exists."""
+    salted shuffle, it just sits before the payload exists.
+
+    When the input is such a generator's own result (it carries a
+    ``PresaltedSource``), generator and kernel run in ONE
+    ``mapInArrow`` over the narrow rows: one Python worker per task,
+    and the generated payload never crosses into the JVM and back.
+    Its bucket count is known there, so a mismatch raises."""
     assert_input_schema(df.select("doc_id", "spans"))
     spark = df.sparkSession
-    if presalted and SALT_COL in df.columns:
-        salted = df
+    run, dropped = _with_drop_metric(spark, kernel_fn, acc=drop_acc)
+    src = getattr(df, "presalted_source", None) if presalted else None
+    if src is not None:
+        if src.salt_buckets != salt_buckets:
+            raise ValueError(
+                f"presalted input was salted into {src.salt_buckets} "
+                f"buckets, extraction asked for {salt_buckets}"
+            )
+        gen = src.generate  # bind: the closure must not capture a DataFrame
+
+        def fused(batches):
+            return run(gen(batches))
+
+        rows, fn = src.pre, fused
+    elif presalted and SALT_COL in df.columns:
+        rows, fn = df.select("doc_id", "spans"), run
     else:
         np = _effective_partitions(spark, num_partitions, salt_buckets)
         salted = salt(df, salt_buckets).repartition(np, SALT_COL)
-    run, dropped = _with_drop_metric(spark, kernel_fn, acc=drop_acc)
-    out = salted.select("doc_id", "spans").mapInArrow(run, schema=out_schema)
-    return out, dropped
+        rows, fn = salted.select("doc_id", "spans"), run
+    return rows.mapInArrow(fn, schema=out_schema), dropped
 
 
 def extract(

@@ -524,6 +524,36 @@ def _spans_to_arrow(rows: list[tuple[str, list]]) -> pa.RecordBatch:
     )
 
 
+def _generator(seed: int, num_col: str, carry_salt: bool = False):
+    """The Arrow generator behind both ``interleaved_from_documents``
+    branches: row ``(num_col, text)`` becomes doc ``doc-%08d`` built
+    from the row's own words.  With ``carry_salt`` the input's
+    ``_salt_bucket`` column rides along unchanged as a third column."""
+    from accountant_pdf_extract_spark.plans.pipeline import SALT_COL
+
+    arrow_salted = pa.schema(
+        list(ARROW_INPUT) + [pa.field(SALT_COL, pa.int32())]
+    )
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            nums = batch.column(num_col).to_pylist()
+            texts = batch.column("text").to_pylist()
+            rows = []
+            for did, text in zip(nums, texts):
+                vocab = (text or "").split() or DEFAULT_WORDS
+                rows.append((f"doc-{did:08d}", build_doc(int(did), seed, vocab)))
+            out = _spans_to_arrow(rows)
+            if carry_salt:
+                out = pa.RecordBatch.from_arrays(
+                    [*out.columns, batch.column(SALT_COL)],
+                    schema=arrow_salted,
+                )
+            yield out
+
+    return gen
+
+
 def interleaved_from_documents(
     spark: SparkSession,
     sf_dir: str,
@@ -542,7 +572,14 @@ def interleaved_from_documents(
     exchange entirely, so the synthesized PDFs never cross a shuffle).
     The salt formula is ``plans.pipeline.salt`` itself, applied to the
     same ``doc-%08d`` id the generator emits — the bucketing can never
-    fork between this path and the post-generation path."""
+    fork between this path and the post-generation path.
+
+    The salted frame also carries ``presalted_source`` (the narrow
+    salted rows, the generator, ``salt_buckets``): ``extract`` /
+    ``extract_fields_table`` with ``presalted=True`` use it to run
+    generation and extraction in ONE ``mapInArrow``, so the payload
+    never leaves the Python worker.  Derived frames drop the
+    attribute and take the two-``mapInArrow`` path."""
     from accountant_pdf_extract_spark.operators.dedup import ensure_parallelism
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -554,25 +591,13 @@ def interleaved_from_documents(
         # serialize the whole synth+shuffle stage; fan out first
         # (no-op at scale)
         docs = ensure_parallelism(docs)
-
-        def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                ids = batch.column("doc_id").to_pylist()
-                texts = batch.column("text").to_pylist()
-                rows = []
-                for did, text in zip(ids, texts):
-                    vocab = (text or "").split() or DEFAULT_WORDS
-                    rows.append(
-                        (f"doc-{did:08d}", build_doc(int(did), seed, vocab))
-                    )
-                yield _spans_to_arrow(rows)
-
-        return docs.mapInArrow(gen, schema=INPUT_SCHEMA)
+        return docs.mapInArrow(_generator(seed, "doc_id"), schema=INPUT_SCHEMA)
 
     from pyspark.sql import functions as F
 
     from accountant_pdf_extract_spark.plans.pipeline import (
         SALT_COL,
+        PresaltedSource,
         _effective_partitions,
         salt,
     )
@@ -590,28 +615,10 @@ def interleaved_from_documents(
         list(INPUT_SCHEMA.fields)
         + [T.StructField(SALT_COL, T.IntegerType())]
     )
-    arrow_salted = pa.schema(
-        list(ARROW_INPUT) + [pa.field(SALT_COL, pa.int32())]
-    )
-
-    def gen_salted(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            out_ids = batch.column("doc_id").to_pylist()
-            nums = batch.column("_num_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            rows = []
-            for out_id, did, text in zip(out_ids, nums, texts):
-                vocab = (text or "").split() or DEFAULT_WORDS
-                rows.append((out_id, build_doc(int(did), seed, vocab)))
-            base = _spans_to_arrow(rows)
-            yield pa.RecordBatch.from_arrays(
-                [*base.columns, batch.column(SALT_COL)],
-                schema=arrow_salted,
-            )
-
-    return pre.mapInArrow(gen_salted, schema=out_schema)
+    gen_salted = _generator(seed, "_num_id", carry_salt=True)
+    out = pre.mapInArrow(gen_salted, schema=out_schema)
+    out.presalted_source = PresaltedSource(pre, gen_salted, salt_buckets)
+    return out
 
 
 def synth_interleaved(

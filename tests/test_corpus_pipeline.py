@@ -94,18 +94,36 @@ def test_zero_span_doc_fields_vs_flat(spark):
     assert flat.where("doc_id = 'empty'").count() == 0
 
 
+def _map_and_exchange_nodes(df) -> tuple[int, int]:
+    """(MapInArrow, Exchange) node counts in the plan ``df`` ran with
+    (AQE's final plan: call after an action on ``df``)."""
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    nodes = [line.lstrip(" +-:*()0123456789") for line in plan.splitlines()]
+    return (
+        sum(n.startswith("MapInArrow") for n in nodes),
+        sum(n.startswith("Exchange") for n in nodes),
+    )
+
+
 def test_presalted_generation_equals_default_path(spark):
     """r6 optimization pin: pre-salting the synth source (salt computed
     on the FUTURE doc_id, repartition before generation, extract with
     presalted=True skipping its own exchange) yields byte-identical
     span sequences to the default salt-after-generation path, and the
     presalted frame really carries the pipeline's salt column with the
-    pipeline's own formula."""
+    pipeline's own formula.
+
+    Straight from the generator, both kernels fuse with it: one
+    MapInArrow and one Exchange, output equal to the unfused plan a
+    derived frame takes, the drop accumulator wired, and a bucket
+    count other than the generator's refused."""
+    import pytest
     from pyspark.sql import functions as F
 
     from accountant_pdf_extract_spark.plans.pipeline import (
         SALT_COL,
         extract,
+        extract_fields_table,
         spans_view,
     )
     from accountant_pdf_extract_spark.sources.synth import (
@@ -131,3 +149,21 @@ def test_presalted_generation_equals_default_path(spark):
         extract(new, salt_buckets=16, num_partitions=4, presalted=True)
     ).orderBy("doc_id", "order").collect()
     assert a == b and len(a) > 0
+
+    for kernel, view in (
+        (extract, spans_view),
+        (extract_fields_table, lambda d: d),
+    ):
+        fused = kernel(new, salt_buckets=16, num_partitions=4, presalted=True)
+        out = view(fused)
+        got = sorted(out.collect(), key=str)
+        assert _map_and_exchange_nodes(out) == (1, 1)
+        assert fused.dropped_docs_acc.value == 0
+        unfused = view(
+            kernel(new.select("*"), salt_buckets=16, num_partitions=4,
+                   presalted=True)
+        )
+        assert got == sorted(unfused.collect(), key=str) and len(got) > 0
+        assert _map_and_exchange_nodes(unfused) == (2, 1)
+        with pytest.raises(ValueError, match="salted into 16 buckets"):
+            kernel(new, salt_buckets=32, num_partitions=4, presalted=True)

@@ -1322,6 +1322,46 @@ def test_encrypted_rc4_roundtrip_matches_oracle():
         assert pdfcrypt.rc4(fk, pdfcrypt.rc4(fk, d)) == d
 
 
+
+def test_rc4_concurrent_threads_match_reference():
+    """rc4() keeps no state shared between threads: threads (more than
+    cores) ciphering different keys and data lengths at once each get
+    exactly the pure-Python reference output on every call."""
+    import sys
+    import threading
+
+    from accountant_pdf_extract_spark.functions import pdfcrypt
+
+    n = 8
+    keys = [bytes([t + 1]) * (5 + t) for t in range(n)]
+    data = [
+        bytes((i * (2 * t + 7) + 3) & 0xFF for i in range(60_000 + 20_000 * t))
+        for t in range(n)
+    ]
+    want = [pdfcrypt._rc4_py(k, d) for k, d in zip(keys, data)]
+    mismatches = []
+    start = threading.Barrier(n)
+
+    def work(t):
+        start.wait()
+        for _ in range(100):
+            if pdfcrypt.rc4(keys[t], data[t]) != want[t]:
+                mismatches.append(t)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(n)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert mismatches == []
+
+
 def test_doc_info_metadata_spans():
     """/Info document metadata (§14.3.3): Title/Author/CreationDate
     extract as trailing ("meta", value, key) spans across every

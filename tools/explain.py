@@ -18,12 +18,14 @@ COMMENT = {
         "Catalyst/AQE; one final group-by exchange."
     ),
     "extract": (
-        "The extraction pipeline proper has ONE Exchange (the "
-        "spec-mandated salted repartition); everything after it is "
-        "map-only: PythonMapInArrow then the sink. The extra exchange "
-        "below the synth MapInArrow is the LOCAL small-file fan-out "
-        "(ensure_parallelism; no-op at scale where inputs ship many "
-        "files). Scan shows ReadSchema pruned to doc_id+text."
+        "The flagship plan (q_extract_spans): ONE Exchange, the "
+        "spec-mandated salted repartition, placed on the narrow "
+        "pre-generation rows (doc_id, _num_id, text) so the generated "
+        "payload never crosses a shuffle. Above it a single "
+        "MapInArrow runs generation AND extraction in one Python "
+        "worker per task (fused), so no payload round-trips through "
+        "the JVM between them; then the sink. Scan shows ReadSchema "
+        "pruned to doc_id+text."
     ),
     "q_agg": (
         "partial_ hash aggregate before the exchange (map-side "
@@ -168,8 +170,12 @@ def main() -> None:
     qs = driver_queries.queries()
 
     sections = []
-    docs = interleaved_from_documents(spark, sf)
-    sections.append(("extract", extract(docs, 256, 32)))
+    presalted = interleaved_from_documents(
+        spark, sf, salt_buckets=256, num_partitions=32
+    )
+    sections.append(
+        ("extract", extract(presalted, 256, 32, presalted=True))
+    )
     for name in ("q_filter", "q_agg", "q_join_bcast", "q_dedup_minhash",
                  "q_dedup_simhash", "q_embed_topk", "q_asof", "tpch_q5",
                  "q_ntile", "q_range_join", "q_global_rank", "tpch_q10",
@@ -186,6 +192,7 @@ def main() -> None:
     from accountant_pdf_extract_spark.plans.pipeline import SALT_COL, salt
 
     tmp = tempfile.mkdtemp(prefix="plans_bucketed_")
+    docs = interleaved_from_documents(spark, sf)
     write_bucketed_input(docs.select("doc_id", "spans"), tmp, salt_buckets=8)
     binp = spark.read.parquet(tmp)
     pruned = salt(binp, 8).where(~F.col(SALT_COL).isin([0, 1, 2, 3]))

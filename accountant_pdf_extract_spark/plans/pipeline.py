@@ -88,20 +88,20 @@ def _run_kernel(df, kernel_fn, out_schema, salt_buckets, num_partitions,
     (single-sourced so the clamp/accumulator wiring can never fork
     between the span and fields paths).
 
-    ``presalted=True`` is a caller CONTRACT (same trust model as the
-    disk-bucketed path in ``salt``): the input already carries
-    ``_salt_bucket`` computed with the same formula/bucket count AND is
-    already exchange-partitioned on it — typically because the salt was
-    applied upstream of a generator on the narrow pre-payload rows
-    (guide §8: shuffle the lightweight proxy, not the heavy bytes).
-    The repartition is then skipped outright; the job keeps exactly one
-    salted shuffle, it just sits before the payload exists.
-
-    When the input is such a generator's own result (it carries a
-    ``PresaltedSource``), generator and kernel run in ONE
-    ``mapInArrow`` over the narrow rows: one Python worker per task,
-    and the generated payload never crosses into the JVM and back.
-    Its bucket count is known there, so a mismatch raises."""
+    ``presalted=True`` on a generator's own result (it carries a
+    ``PresaltedSource``: the salt was applied upstream of the
+    generator on the narrow pre-payload rows — guide §8: shuffle the
+    lightweight proxy, not the heavy bytes) runs generator and kernel
+    in ONE ``mapInArrow`` over those rows, so the job keeps exactly
+    one salted shuffle, before the payload exists; one Python worker
+    per task, and the generated payload never crosses into the JVM
+    and back.  The bucket count is known there, so a mismatch raises.
+    Any other input (derived frames included) takes the default
+    salt → repartition path, where ``salt`` keeps a carried
+    ``_salt_bucket``.  ``cache()`` / ``persist()`` return the same
+    object and so keep ``presalted_source``: the fused path then
+    recomputes the generation from the narrow rows instead of reading
+    the cached ones."""
     assert_input_schema(df.select("doc_id", "spans"))
     spark = df.sparkSession
     run, dropped = _with_drop_metric(spark, kernel_fn, acc=drop_acc)
@@ -118,8 +118,6 @@ def _run_kernel(df, kernel_fn, out_schema, salt_buckets, num_partitions,
             return run(gen(batches))
 
         rows, fn = src.pre, fused
-    elif presalted and SALT_COL in df.columns:
-        rows, fn = df.select("doc_id", "spans"), run
     else:
         np = _effective_partitions(spark, num_partitions, salt_buckets)
         salted = salt(df, salt_buckets).repartition(np, SALT_COL)

@@ -579,7 +579,10 @@ def interleaved_from_documents(
     ``extract_fields_table`` with ``presalted=True`` use it to run
     generation and extraction in ONE ``mapInArrow``, so the payload
     never leaves the Python worker.  Derived frames drop the
-    attribute and take the two-``mapInArrow`` path."""
+    attribute and take the default salt → repartition path.
+    ``cache()`` / ``persist()`` return the same object and keep it, so
+    the fused path then recomputes the generation instead of reading
+    the cached rows."""
     from accountant_pdf_extract_spark.operators.dedup import ensure_parallelism
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(

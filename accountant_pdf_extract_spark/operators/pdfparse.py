@@ -1521,6 +1521,11 @@ def parse_pdf_full(
             # page yields nothing) instead of raising and losing the
             # whole document; oracle mirrors this.
             streams[num] = _decode_stream(payload, dict_part)
+        elif num in stream_dicts:
+            # last-wins like objs: a later stream-less redefinition
+            # (incremental update) must not leave the earlier
+            # occurrence's stream behind for the ObjStm/XRef passes
+            del stream_dicts[num], streams[num]
 
     # ---- PDF 1.5: expand object streams (/Type /ObjStm) --------------
     # Embedded objects carry no "N 0 obj" headers in the raw bytes, so

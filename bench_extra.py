@@ -19,23 +19,7 @@ import statistics
 import sys
 import time
 
-
-def _repin(cpus: int) -> None:
-    if os.environ.get("_BENCH_PINNED") == "1":
-        return
-    try:
-        allowed = sorted(os.sched_getaffinity(0))
-    except AttributeError:
-        return
-    os.environ["_BENCH_PINNED"] = "1"
-    if len(allowed) <= cpus:
-        return
-    import shutil
-
-    if shutil.which("taskset") is None:
-        return
-    pick = ",".join(str(c) for c in allowed[:cpus])
-    os.execvp("taskset", ["taskset", "-c", pick, sys.executable, *sys.argv])
+from bench._util import repin
 
 
 def main() -> None:
@@ -49,7 +33,7 @@ def main() -> None:
     ap.add_argument("--suffix", default="before")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
-    _repin(args.cpus)
+    repin(args.cpus)
 
     from accountant_pdf_extract_spark.plans import driver_queries
     from accountant_pdf_extract_spark.session import get_spark

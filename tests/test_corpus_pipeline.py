@@ -163,3 +163,37 @@ def test_presalted_generation_equals_default_path(spark):
         assert got == sorted(default.collect(), key=str) and len(got) > 0
         with pytest.raises(ValueError, match="salted into 16 buckets"):
             kernel(new, salt_buckets=32, num_partitions=4, presalted=True)
+
+
+def test_workers_see_stat_checked_zip_invalidation(spark):
+    """Every Python task runs with the package's stat-checked
+    ``zipimporter.invalidate_caches``: cloudpickle resolves the engine
+    function the UDF references, importing the package, before the
+    UDF body's first line runs."""
+    import sys
+
+    import pyarrow as pa
+
+    from accountant_pdf_extract_spark.operators.kernel import extract_batches
+
+    def report(batches):
+        import zipimport
+
+        seen = zipimport.zipimporter.invalidate_caches.__module__
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"seen": [seen] * b.num_rows,
+                 "engine": [extract_batches.__module__] * b.num_rows}
+            )
+
+    out = (
+        spark.range(0, 64, numPartitions=8)
+        .mapInArrow(report, "seen string, engine string")
+        .collect()
+    )
+    expect = ("accountant_pdf_extract_spark" if sys.version_info < (3, 13)
+              else "zipimport")
+    assert len(out) == 64
+    assert {(r["seen"], r["engine"]) for r in out} == {
+        (expect, "accountant_pdf_extract_spark.operators.kernel")
+    }

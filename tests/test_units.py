@@ -1008,6 +1008,9 @@ def test_pdfwriter_numbers_never_use_exponent_notation():
     assert _n(1e-05) == "0" and _n(5e-05) == "0.0001" and _n(-1e-05) == "0"
     assert _n(1234567.0) == "1234567" and _n(0.5) == "0.5"
     assert "e" not in _n(2.5e6).lower()
+    # non-finite coordinates degrade to '0' instead of raising in the
+    # integral fast path (int(nan) / int(inf) raise)
+    assert _n(float("nan")) == _n(float("inf")) == _n(float("-inf")) == "0"
 
     pg = PageBuilder()
     pg.text(5e-05, 700, "hello")
@@ -2376,6 +2379,45 @@ def test_xref_type2_recovers_corrupt_objstm_header_objnums():
     assert pdf_spans(pdf) == [("text", "recovered", "")]
 
 
+def test_incremental_update_stream_less_redefinition_drops_objstm():
+    """An incremental update redefines object 5, an /ObjStm in the
+    original revision, as a plain dict.  Objects are last-wins, so the
+    stale ObjStm payload must not be expanded: the page packed only in
+    it stays unresolved and the update's page alone is read, engine ≡
+    oracle."""
+    from tests.oracle import pdf_spans
+
+    stale = "BT /F1 10 Tf 72 700 Td (stale revision) Tj ET\n"
+    fresh = "BT /F1 10 Tf 72 700 Td (updated revision) Tj ET\n"
+    packed = ("<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+              "/Contents 3 0 R >>")
+    header = "8 0\n"
+    payload = header + packed
+    objstm = (f"<< /Type /ObjStm /N 1 /First {len(header)} "
+              f"/Length {len(payload)} >>\nstream\n{payload}endstream")
+    original = (
+        "%PDF-1.5\n"
+        f"3 0 obj\n<< /Length {len(stale)} >>\nstream\n{stale}endstream\nendobj\n"
+        f"5 0 obj\n{objstm}\nendobj\n"
+        "startxref\n0\n%%EOF\n"
+    )
+    update = (
+        "1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        "2 0 obj\n<< /Type /Pages /Kids [4 0 R 8 0 R] /Count 2 >>\nendobj\n"
+        "4 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        "/Contents 7 0 R >>\nendobj\n"
+        "5 0 obj\n<< /Type /Metadata >>\nendobj\n"
+        f"7 0 obj\n<< /Length {len(fresh)} >>\nstream\n{fresh}endstream\nendobj\n"
+        "trailer\n<< /Size 9 /Root 1 0 R /Prev 0 >>\n"
+        "startxref\n0\n%%EOF\n"
+    )
+    pdf = original + update
+    eng, _ = extract_doc([("pdf", pdf, "", 0)])
+    want = [("text", "updated revision", "")]
+    assert pdf_spans(pdf) == want
+    assert [(k, t, m) for k, t, m, _ in eng] == want
+
+
 def test_corrupt_objstm_degrades_not_raises():
     """A /Type /ObjStm whose Flate payload is corrupt yields an empty
     object set from that stream (doc parses to nothing) — engine and
@@ -3415,3 +3457,114 @@ def test_type3_font_differences_decode():
         )
         outs.append([(k, t, r) for k, t, r, _ in out])
     assert outs[0] == outs[1] == [("text", "Total: €123.45", "")]
+
+
+# --------------------------------------------------------------------------
+# zipimport cache invalidation (package import patch)
+# --------------------------------------------------------------------------
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+def _drop_zip_importer(path: str, names) -> None:
+    import sys
+    import zipimport
+
+    sys.path.remove(path)
+    sys.path_importer_cache.pop(path, None)
+    zipimport._zip_directory_cache.pop(path, None)
+    for name in names:
+        sys.modules.pop(name, None)
+
+
+def test_zip_invalidation_rereads_only_changed_archives(tmp_path, monkeypatch):
+    """importlib.invalidate_caches() (which pyspark's worker calls per
+    task) re-reads a zip archive's directory only after the archive
+    changed on disk; an unchanged archive keeps its cached directory."""
+    import importlib
+    import sys
+    import zipimport
+
+    import pytest
+
+    if sys.version_info >= (3, 13):
+        pytest.skip("the stdlib re-reads zip directories lazily on 3.13+")
+    archive = str(tmp_path / "zc.zip")
+    _write_zip(archive, {"zc_mod_a": "VALUE = 'a'\n"})
+    sys.path.insert(0, archive)
+    try:
+        assert importlib.import_module("zc_mod_a").VALUE == "a"
+        importlib.invalidate_caches()  # records the archive's stamp
+        reads: list[str] = []
+        read_directory = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return read_directory(path)
+
+        monkeypatch.setattr(zipimport, "_read_directory", counting)
+        for _ in range(3):
+            importlib.invalidate_caches()
+        assert reads == []
+
+        _write_zip(archive, {"zc_mod_a": "VALUE = 'a'\n",
+                             "zc_mod_b": "VALUE = 'b'\n"})
+        importlib.invalidate_caches()
+        assert reads == [archive]
+        assert importlib.import_module("zc_mod_b").VALUE == "b"
+        importlib.invalidate_caches()
+        assert reads == [archive]
+    finally:
+        _drop_zip_importer(archive, ("zc_mod_a", "zc_mod_b"))
+
+
+def test_zip_invalidation_patch_gated_on_interpreter_version(monkeypatch):
+    """The stat check replaces the stdlib method only before CPython
+    3.13, where the stdlib itself stopped re-reading eagerly."""
+    import sys
+    import zipimport
+
+    import accountant_pdf_extract_spark as pkg
+
+    installed = zipimport.zipimporter.invalidate_caches
+    assert installed.__module__ == (
+        pkg.__name__ if sys.version_info < (3, 13) else "zipimport"
+    )
+
+    def stdlib(self):
+        pass
+
+    stdlib.__module__ = "zipimport"
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stdlib)
+    pkg._stat_checked_zip_invalidation((3, 13, 0))
+    assert zipimport.zipimporter.invalidate_caches is stdlib
+    pkg._stat_checked_zip_invalidation((3, 12, 1))
+    assert zipimport.zipimporter.invalidate_caches.__module__ == pkg.__name__
+
+
+def test_zip_invalidation_deleted_archive_empties_cache(tmp_path):
+    """A failed stat falls back to the stdlib method: the importer of a
+    deleted archive forgets its directory, as it did unpatched."""
+    import importlib
+    import os
+    import sys
+    import zipimport
+
+    archive = str(tmp_path / "gone.zip")
+    _write_zip(archive, {"zc_mod_gone": "VALUE = 1\n"})
+    sys.path.insert(0, archive)
+    try:
+        importlib.import_module("zc_mod_gone")
+        importer = sys.path_importer_cache[archive]
+        os.remove(archive)
+        importlib.invalidate_caches()
+        assert importer._files == {}
+        assert archive not in zipimport._zip_directory_cache
+    finally:
+        _drop_zip_importer(archive, ("zc_mod_gone",))
